@@ -276,10 +276,27 @@ def merge_bai(parts: list[BaiIndex], part_lengths: list[int], base_offset: int =
     return BaiIndex(out, n_no_coor)
 
 
+def union_chunks(chunks) -> list[tuple[int, int]]:
+    """Sorted union of (beg, end) virtual-offset chunks: overlapping and
+    adjacent chunks coalesce, so the result is disjoint."""
+    merged: list[tuple[int, int]] = []
+    for cb, ce in sorted(chunks):
+        if merged and cb <= merged[-1][1]:
+            merged[-1] = (merged[-1][0], max(merged[-1][1], ce))
+        else:
+            merged.append((cb, ce))
+    return merged
+
+
 def chunks_for_interval(idx: BaiIndex, ref_id: int, start1: int, end1: int) -> list[tuple[int, int]]:
     """Virtual-offset chunks possibly containing records overlapping the
     1-based closed interval — the read-side file-span operation
-    (AbstractBinarySamSource.java:117-137 via htsjdk BAMFileSpan)."""
+    (AbstractBinarySamSource.java:117-137 via htsjdk BAMFileSpan).
+
+    The linear index gives a lower bound: no record overlapping the
+    interval starts before the entry of its first 16 kb window. That entry
+    is itself a record start, so chunks are clipped to begin there, not
+    only dropped when they end before it."""
     if ref_id < 0 or ref_id >= len(idx.refs):
         return []
     r = idx.refs[ref_id]
@@ -292,16 +309,20 @@ def chunks_for_interval(idx: BaiIndex, ref_id: int, start1: int, end1: int) -> l
     for b in _reg2bins(beg0, end0):
         for cb, ce in r.bins.get(b, ()):
             if ce > min_voff:
-                out.append((cb, ce))
-    out.sort()
-    # coalesce overlapping/adjacent
-    merged: list[tuple[int, int]] = []
-    for cb, ce in out:
-        if merged and cb <= merged[-1][1]:
-            merged[-1] = (merged[-1][0], max(merged[-1][1], ce))
-        else:
-            merged.append((cb, ce))
-    return merged
+                out.append((max(cb, min_voff), ce))
+    return union_chunks(out)
+
+
+def record_start_voffs(idx: BaiIndex) -> list[int]:
+    """Sorted record-start virtual offsets the index names: every chunk
+    begin and every set linear-index entry. Split planning snaps byte
+    positions onto these instead of guessing record boundaries."""
+    starts = set()
+    for r in idx.refs:
+        for chunks in r.bins.values():
+            starts.update(cb for cb, _ce in chunks)
+        starts.update(v for v in r.linear if v > 0)
+    return sorted(starts)
 
 
 def last_indexed_voff(idx: BaiIndex) -> int:

@@ -412,10 +412,17 @@ def split_overlaps_intervals(
 ) -> bool:
     """True if any indexed chunk for any interval overlaps the compressed
     byte range [byte_start, byte_end) — the getSplits-time drop test
-    (TribbleIndexIntervalFilteringTextInputFormat.java:59-98)."""
+    (TribbleIndexIntervalFilteringTextInputFormat.java:59-98).
+
+    Text-split ownership (``sources.variants._range_lines``) gives a line
+    at offset 0 of the first block at or after ``byte_end`` to this split,
+    not the next one, so a chunk starting at offset 0 of a block within
+    one maximal block size past ``byte_end`` also keeps this split."""
     lo, hi = byte_start << 16, byte_end << 16
     for contig, start, end in intervals:
         for cb, ce in chunks_for_interval(idx, contig, start, end):
             if cb < hi and ce > lo:
+                return True
+            if cb & 0xFFFF == 0 and byte_end <= cb >> 16 < byte_end + bgzf.MAX_BLOCK_SIZE:
                 return True
     return False

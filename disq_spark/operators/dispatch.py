@@ -46,7 +46,7 @@ def resolve_method(method: str, df, small_bytes: int = SMALL_INPUT_BYTES) -> str
     return method
 
 
-# partition-count memo keyed on (session, semantic plan hash).
+# partition-count memo keyed on (Spark application id, semantic plan hash).
 # `df.rdd.getNumPartitions()` forces a FULL physical planning of the
 # subtree (plus a Python-conversion RDD) on every call — a per-build
 # driver cost paid by every fanned operator, three times per query in
@@ -57,15 +57,20 @@ def resolve_method(method: str, df, small_bytes: int = SMALL_INPUT_BYTES) -> str
 # Staleness is impossible to observe in results — the count only gates
 # a row-placement-neutral exchange — and a rewritten source at the same
 # path gets a fresh relation from the load memo's file-identity key,
-# which changes the semantic hash.
+# which changes the semantic hash. The application id names the session
+# because a later session can reuse the id() of a freed py4j proxy.
 _NPART_MEMO: dict[tuple, int] = {}
 
 
-def _source_partitions(df) -> int:
+def _npart_key(df) -> tuple | None:
     try:
-        key = (id(df.sparkSession._jsparkSession), df.semanticHash())
+        return (df.sparkSession.sparkContext.applicationId, df.semanticHash())
     except Exception:
-        key = None
+        return None
+
+
+def _source_partitions(df) -> int:
+    key = _npart_key(df)
     if key is not None and key in _NPART_MEMO:
         return _NPART_MEMO[key]
     try:

@@ -5,24 +5,36 @@ planning as distributed jobs — with an index the plan is pure metadata):
 
 1. read header (+ sequence dictionary) from the first BGZF blocks
    (AbstractSamSource.java:54-71).
-2. with ``.sbi``: byte splits -> record-start virtual-offset chunks via
-   the index, one flatMap-equivalent done driver-side
-   (BamSource.java:99-119).
-3. without: byte splits realign to the next BGZF block boundary, then a
-   record-start guesser validates candidate offsets by checking ~10
-   consecutive records' field invariants (BamSource.java:120-139 +
-   BamRecordGuesser.java:60-226, READS_TO_CHECK=10, MAX_READ_SIZE cap).
+2. split starts, by which index files exist:
+   a. ``.sbi``: byte splits -> record-start virtual-offset chunks via the
+      index (BamSource.java:99-119);
+   b. else ``.bai``: each byte split snaps to the first record start the
+      index names at or after it — every chunk begin and every set
+      linear-index entry is one;
+   c. else, and for splits past the last indexed record (the
+      unplaced-unmapped tail): byte splits realign to the next BGZF
+      block boundary, then a record-start guesser validates candidate
+      offsets by checking ~10 consecutive records' field invariants
+      (BamSource.java:120-139 + BamRecordGuesser.java:60-226,
+      READS_TO_CHECK=10, MAX_READ_SIZE cap).
+3. interval queries with a ``.bai``: each split is cut down to its
+   intersection with the index's chunks for the intervals (plus the
+   unplaced tail when asked), and consecutive spans are packed into
+   partitions of at most ``split_size`` compressed bytes. Full scans keep
+   one partition per split.
 
-Executors decode their virtual-offset span into Arrow batches via
-mapInPandas. Non-overlap invariant: a partition decodes exactly the
-records whose start virtual offset lies in [vStart, vEnd)
-(AbstractBinarySamSource.java:95-98 one-chunk-per-partition analog).
+Executors decode their virtual-offset spans into Arrow batches via
+mapInPandas, inflating only the blocks a span covers. Non-overlap
+invariant: a span decodes exactly the records whose start virtual offset
+lies in [vStart, vEnd), and the spans of a read are disjoint
+(AbstractBinarySamSource.java:95-98 analog).
 """
 
 from __future__ import annotations
 
 from disq_spark import fs as _dfs
 
+import bisect
 import os
 import struct as _struct
 from typing import Iterator
@@ -43,25 +55,36 @@ MAX_SEARCH_BYTES = 10 * 1024 * 1024  # MAX_READ_SIZE, BamSource.java:74
 
 
 class _BlockBuffer:
-    """Decompressed view of a run of BGZF blocks with virtual-offset maps."""
+    """Decompressed view of a run of BGZF blocks with virtual-offset maps.
 
-    def __init__(self, path: str, c_start: int, min_bytes: int):
+    ``stop`` bounds the inflate: blocks starting at or after it are only
+    read when a caller extends past them (a record running over the end).
+    """
+
+    def __init__(self, path: str, c_start: int, min_bytes: int, stop: int | None = None):
         self.path = path
+        self.stop = stop
         self.blocks: list[tuple[int, int, int]] = []  # (c_pos, buf_start, u_size)
+        self.end_c = c_start  # compressed position just past the last block
         chunks = []
         total = 0
         with _dfs.open_input(path) as f:
             for blk in bgzf.scan_blocks(path, c_start):
                 data = bgzf.decompress_block(f, blk.pos)
                 self.blocks.append((blk.pos, total, len(data)))
+                self.end_c = blk.end
                 chunks.append(data)
                 total += len(data)
-                if total >= min_bytes:
+                if total >= min_bytes or self._at_stop(blk):
                     break
         self.data = b"".join(chunks)
 
+    def _at_stop(self, blk) -> bool:
+        return self.stop is not None and blk.end >= self.stop
+
     def extend(self, min_extra: int) -> bool:
-        """Append more blocks; False if at EOF."""
+        """Append more blocks; False if at EOF. Stops at ``stop`` once it
+        has added data; past ``stop`` it adds one data block at a time."""
         if not self.blocks:
             return False
         last_c, last_b, last_u = self.blocks[-1]
@@ -73,9 +96,10 @@ class _BlockBuffer:
                     continue
                 data = bgzf.decompress_block(f, blk.pos)
                 self.blocks.append((blk.pos, len(self.data) + added, len(data)))
+                self.end_c = blk.end
                 chunks.append(data)
                 added += len(data)
-                if added >= min_extra:
+                if added >= min_extra or (added and self._at_stop(blk)):
                     break
             if added == 0:
                 return False
@@ -250,8 +274,11 @@ def _scan_for_record_start(
 def plan_bam_chunks(
     path: str, split_size: int, refs: list[tuple[str, int]], first_voff: int
 ) -> list[tuple[int, int]]:
-    """[(vStart, vEnd)] per split. Uses .sbi when present; else the
-    block-realign + record-guess fallback, all driver-side."""
+    """[(vStart, vEnd)] per split, all driver-side. Split starts come from
+    the ``.sbi`` when present; else each byte split snaps to the first
+    record start the ``.bai`` names at or after it; else (no index, or a
+    split past the last indexed record) the block-realign + record-guess
+    fallback."""
     size = _dfs.getsize(path)
     sbi_path = path + ".sbi"
     chunks: list[tuple[int, int]] = []
@@ -265,13 +292,17 @@ def plan_bam_chunks(
             start += split_size
         return chunks
 
+    indexed = _bai_record_starts(path, len(refs), size)
     n_ref = len(refs)
     ref_lens = [l for _n, l in refs]
     starts: list[int] = []
     pos = 0
     while pos < size:
+        i = bisect.bisect_left(indexed, pos << 16)
         if pos == 0:
             starts.append(first_voff)
+        elif i < len(indexed):
+            starts.append(indexed[i])
         else:
             buf = _BlockBuffer(path, pos, 1 << 20)
             if buf.blocks:
@@ -287,6 +318,20 @@ def plan_bam_chunks(
         if s < e:
             chunks.append((s, e))
     return chunks
+
+
+def _bai_record_starts(path: str, n_ref: int, size: int) -> list[int]:
+    """Record-start voffs named by ``path + '.bai'`` (sorted), or [] when
+    there is no index or it does not describe this file's references."""
+    from disq_spark.formats import bai as baimod
+
+    if not _dfs.exists(path + ".bai"):
+        return []
+    idx = baimod.read_bai(path + ".bai")
+    if len(idx.refs) != n_ref:
+        return []
+    starts = baimod.record_start_voffs(idx)
+    return starts[: bisect.bisect_left(starts, size << 16)]
 
 
 def decode_chunk(
@@ -319,9 +364,13 @@ def decode_chunk_cols(
 ):
     """Column-dict variant of decode_chunk: a cheap offsets walk (one
     struct.unpack per record) followed by the numpy batch decoder — the
-    hot read path feeding Arrow batches in mapInPandas."""
+    hot read path feeding Arrow batches in mapInPandas.
+
+    Inflates only the blocks holding [v_start, v_end): through the block
+    that holds v_end, or up to it when v_end is a block start."""
     c_start, u_start = v_start >> 16, v_start & 0xFFFF
-    buf = _BlockBuffer(path, c_start, 1 << 22)
+    stop = (v_end >> 16) + (1 if v_end & 0xFFFF else 0)
+    buf = _BlockBuffer(path, c_start, 1 << 22, stop)
     off = buf.buf_offset(c_start, u_start)
     if off is None:
         return None
@@ -331,29 +380,23 @@ def decode_chunk_cols(
     # the voff boundary check is O(1) amortized instead of a per-record
     # scan over the block table
     while True:
-        if off + 4 > len(buf.data):
-            if not buf.extend(1 << 22):
-                break
         while bi < len(buf.blocks) and off >= buf.blocks[bi][1] + buf.blocks[bi][2]:
             bi += 1
-        if bi >= len(buf.blocks):
-            break
+        if bi == len(buf.blocks):  # at the end of the buffer
+            if buf.end_c << 16 >= v_end or not buf.extend(1 << 22):
+                break
+            continue
         c_pos, b_start, _u = buf.blocks[bi]
-        voff = (c_pos << 16) | (off - b_start)
-        if voff >= v_end:
+        if (c_pos << 16) | (off - b_start) >= v_end:
             break
         # ensure whole record in buffer
         while off + 4 > len(buf.data) or off + 4 + unpack("<i", buf.data, off)[0] > len(buf.data):
             if not buf.extend(1 << 22):
                 break
         if off + 4 > len(buf.data) or off + 4 + unpack("<i", buf.data, off)[0] > len(buf.data):
-            break  # truncated final record (file cut mid-block)
+            break  # end of data, or a truncated final record (file cut mid-block)
         rec_offs.append(off)
         off += 4 + unpack("<i", buf.data, off)[0]
-        if off >= len(buf.data):
-            # might be exactly at end-of-data
-            if not buf.extend(1 << 22):
-                break
     return bamcodec.decode_batch(
         buf.data,
         rec_offs,
@@ -686,10 +729,10 @@ def read_bam(
 
     ``intervals``/``traverse_unplaced_unmapped`` mirror the reference's
     HtsjdkReadsTraversalParameters surface: a residual Column predicate
-    (always correct) plus .bai-driven partition pruning when the index
-    exists (AbstractBinarySamSource.java:111-158 — but unlike the
-    reference we do not *require* an index, :112-116; index-less input
-    degrades to filter-only).
+    (always correct) plus, when the index exists, a decode limited to
+    the .bai's chunks for the intervals (AbstractBinarySamSource.java:
+    111-158 — but unlike the reference we do not *require* an index,
+    :112-116; index-less input degrades to filter-only).
 
     ``pair_atomic``: for queryname-grouped input, snap partition
     boundaries so a read name's records never split across partitions —
@@ -721,29 +764,86 @@ def _chunk_may_match(
     intervals: list | None,
     unplaced_unmapped: bool,
 ) -> list[tuple[int, int]]:
-    """Drop planned (vStart, vEnd) chunks the .bai proves irrelevant.
+    """The parts of the planned (vStart, vEnd) chunks the .bai says can
+    hold matching records: each chunk intersected with the union of every
+    interval's file span, plus [last indexed voff, EOF) for the
+    unplaced-unmapped tail (AbstractBinarySamSource.java:117-157).
 
-    A chunk survives if it overlaps any interval's file span, or (for the
-    unplaced-unmapped tail) extends past the last indexed offset
-    (AbstractBinarySamSource.java:117-157). Pure metadata pruning — the
-    residual record filter keeps correctness regardless.
+    The result is ordered and disjoint and each span lies inside one
+    chunk, so decoding the spans still reads each record at most once.
+    Every span boundary is a chunk boundary or an index chunk begin, both
+    record starts. Pure metadata — the residual record filter keeps
+    correctness however loose the index is.
     """
     from disq_spark.formats import bai as baimod
 
     idx = baimod.read_bai(bai_path)
     ref_id = {name: i for i, (name, _l) in enumerate(refs)}
-    spans: list[tuple[int, int]] = []
+    wanted: list[tuple[int, int]] = []
     for iv in intervals or []:
-        spans.extend(baimod.chunks_for_interval(idx, ref_id.get(iv.contig, -1), iv.start, iv.end))
-    tail_voff = baimod.last_indexed_voff(idx) if unplaced_unmapped else None
+        wanted.extend(baimod.chunks_for_interval(idx, ref_id.get(iv.contig, -1), iv.start, iv.end))
+    if unplaced_unmapped:
+        wanted.append((baimod.last_indexed_voff(idx), chunks[-1][1] if chunks else 0))
+    wanted = baimod.union_chunks(wanted)
     out = []
+    j = 0
     for v_start, v_end in chunks:
-        keep = any(cb < v_end and ce > v_start for cb, ce in spans)
-        if not keep and tail_voff is not None:
-            keep = v_end > tail_voff
-        if keep:
-            out.append((v_start, v_end))
+        while j < len(wanted) and wanted[j][1] <= v_start:
+            j += 1
+        k = j
+        while k < len(wanted) and wanted[k][0] < v_end:
+            out.append((max(v_start, wanted[k][0]), min(v_end, wanted[k][1])))
+            k += 1
     return out
+
+
+def _group_spans(
+    spans: list[tuple[int, int]], chunks: list[tuple[int, int]], split_size: int
+) -> list[list[tuple[int, int]]]:
+    """Consecutive spans packed into partitions of at most ``split_size``
+    compressed bytes. Spans of one planned chunk always share a partition,
+    so there are never more partitions than chunks with a span."""
+    chunk_starts = [vs for vs, _ve in chunks]
+    groups: list[list[tuple[int, int]]] = []
+    group_chunk = size = 0
+    for vs, ve in spans:
+        k = bisect.bisect_right(chunk_starts, vs) - 1
+        n = (ve >> 16) - (vs >> 16)
+        if groups and (k == group_chunk or size + n <= split_size):
+            groups[-1].append((vs, ve))
+            size += n
+        else:
+            groups.append([(vs, ve)])
+            group_chunk, size = k, n
+    return groups
+
+
+def plan_bam_partitions(
+    files: list[tuple[str, list[tuple[str, int]], int]],
+    split_size: int,
+    intervals: list | None = None,
+    unplaced_unmapped: bool = False,
+    pair_atomic: bool = False,
+) -> list[tuple[str, list[tuple[int, int]]]]:
+    """Partitions of a BAM read, in file order: (path, [(vStart, vEnd),
+    ...]) per partition, from ``files`` = [(path, refs, first_voff)].
+
+    A full scan gets one partition per planned split. An interval query
+    on a file with a ``.bai`` decodes only the index's spans
+    (``_chunk_may_match``), packed by ``_group_spans``; without a
+    ``.bai`` every split is read and the residual filter does the work.
+    """
+    parts: list[tuple[str, list[tuple[int, int]]]] = []
+    for p, refs, first_voff in files:
+        chunks = plan_bam_chunks(p, split_size, refs, first_voff)
+        if pair_atomic:
+            chunks = adjust_chunks_for_queryname_groups(p, chunks)
+        if (intervals is not None or unplaced_unmapped) and _dfs.exists(p + ".bai"):
+            spans = _chunk_may_match(p + ".bai", refs, chunks, intervals, unplaced_unmapped)
+            parts.extend((p, g) for g in _group_spans(spans, chunks, split_size))
+        else:
+            parts.extend((p, [c]) for c in chunks)
+    return parts
 
 
 def _read_bam_all(
@@ -760,19 +860,13 @@ def _read_bam_all(
     header, refs, first_voff = read_bam_header(paths[0])
     schema = READS_SCHEMA_RAW_TAGS if raw_tags else READS_SCHEMA
 
-    plan: list[tuple[str, int, int]] = []
-    for p in paths:
-        _h, p_refs, p_voff = (header, refs, first_voff) if p == paths[0] else read_bam_header(p)
-        p_chunks = plan_bam_chunks(p, split_size, p_refs, p_voff)
-        if pair_atomic:
-            p_chunks = adjust_chunks_for_queryname_groups(p, p_chunks)
-        if (intervals is not None or traverse_unplaced_unmapped) and _dfs.exists(p + ".bai"):
-            p_chunks = _chunk_may_match(
-                p + ".bai", p_refs, p_chunks, intervals, traverse_unplaced_unmapped
-            )
-        for v_start, v_end in p_chunks:
-            plan.append((p, v_start, v_end))
-
+    files = [(paths[0], refs, first_voff)] + [(p, *read_bam_header(p)[1:]) for p in paths[1:]]
+    plan = [
+        (p, [vs for vs, _ve in spans], [ve for _vs, ve in spans])
+        for p, spans in plan_bam_partitions(
+            files, split_size, intervals, traverse_unplaced_unmapped, pair_atomic
+        )
+    ]
     if not plan:
         return spark.createDataFrame([], schema), header
 
@@ -782,7 +876,7 @@ def _read_bam_all(
     # README.md:152-156 record-ordering semantics)
     plan_df = spark.createDataFrame(
         spark.sparkContext.parallelize(plan, len(plan)),
-        "path string, v_start long, v_end long",
+        "path string, v_starts array<long>, v_ends array<long>",
     )
     refs_b = refs
 
@@ -793,13 +887,22 @@ def _read_bam_all(
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for _, r in pdf.iterrows():
-                cols = decode_chunk_cols(
-                    r["path"], refs_b, int(r["v_start"]), int(r["v_end"]),
-                    with_seq=w_seq, with_qual=w_qual, with_tags=w_tags,
-                    raw_tags=raw_tags,
-                )
-                if cols and cols["flags"]:
-                    yield pd.DataFrame(cols, columns=READS_COLUMNS)
+                decoded = [
+                    decode_chunk_cols(
+                        r["path"], refs_b, int(vs), int(ve),
+                        with_seq=w_seq, with_qual=w_qual, with_tags=w_tags,
+                        raw_tags=raw_tags,
+                    )
+                    for vs, ve in zip(r["v_starts"], r["v_ends"])
+                ]
+                decoded = [cols for cols in decoded if cols and cols["flags"]]
+                if not decoded:
+                    continue
+                # one batch per partition, however many spans it holds
+                cols = decoded[0] if len(decoded) == 1 else {
+                    c: [v for d in decoded for v in d[c]] for c in READS_COLUMNS
+                }
+                yield pd.DataFrame(cols, columns=READS_COLUMNS)
 
     return plan_df.mapInPandas(decode, schema), header
 

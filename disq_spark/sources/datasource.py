@@ -10,9 +10,10 @@ re-expressed as first-class Spark sources: after
     spark.read.format("vcf").load("calls.vcf.bgz")
 
 with no disq_spark-specific reader calls. Partition planning reuses the
-same driver-side machinery as ``read_bam``/``read_vcf`` (.sbi splits or
-the BGZF block + record-guess heuristic, BGZF block-aligned text
-ranges), so partitioning behavior is identical to the functional API.
+same driver-side machinery as ``read_bam``/``read_vcf`` (BAM:
+``plan_bam_partitions``, splits from the .sbi, else the .bai, else the
+record-guess heuristic; VCF: BGZF block-aligned text ranges), so
+partitioning behavior is identical to the functional API.
 
 Scale notes:
 - ``partitions()`` runs once on the driver and is pure metadata (index
@@ -63,8 +64,7 @@ DEFAULT_SPLIT_SIZE = 1 << 20
 class BamChunk(InputPartition):
     path: str
     refs: list
-    v_start: int
-    v_end: int
+    spans: tuple  # ((v_start, v_end), ...) decoded in order
     hosts: tuple = ()  # block-location hints (informational; see fs.block_locations)
     intervals: tuple | None = None  # ((contig, start, end), ...) residual filter
     unplaced_unmapped: bool = False
@@ -94,8 +94,7 @@ class BamReader(DataSourceReader):
     def partitions(self) -> list[BamChunk]:
         from disq_spark.sources.bam_source import (
             BAM_EXTENSIONS,
-            _chunk_may_match,
-            plan_bam_chunks,
+            plan_bam_partitions,
             read_bam_header,
         )
         from disq_spark.sources.plan import resolve_paths
@@ -105,23 +104,22 @@ class BamReader(DataSourceReader):
             if self.intervals is not None
             else None
         )
+        files = [(p, *read_bam_header(p)[1:]) for p in resolve_paths(self.path, BAM_EXTENSIONS)]
+        refs_of = {p: refs for p, refs, _v in files}
         parts: list[BamChunk] = []
-        for p in resolve_paths(self.path, BAM_EXTENSIONS):
-            _header, refs, first_voff = read_bam_header(p)
-            chunks = plan_bam_chunks(p, self.split_size, refs, first_voff)
-            if (self.intervals is not None or self.unplaced_unmapped) and _dfs.exists(p + ".bai"):
-                chunks = _chunk_may_match(
-                    p + ".bai", refs, chunks, self.intervals, self.unplaced_unmapped
+        for p, spans in plan_bam_partitions(
+            files, self.split_size, self.intervals, self.unplaced_unmapped
+        ):
+            c0, c1 = spans[0][0] >> 16, spans[-1][1] >> 16
+            hosts = tuple(_dfs.block_locations(p, c0, c1 - c0))
+            parts.append(
+                BamChunk(
+                    p, refs_of[p], tuple(spans), hosts, iv_spec, self.unplaced_unmapped,
+                    self.columns,
                 )
-            for vs, ve in chunks:
-                hosts = tuple(_dfs.block_locations(p, vs >> 16, (ve >> 16) - (vs >> 16)))
-                parts.append(
-                    BamChunk(
-                        p, refs, vs, ve, hosts, iv_spec, self.unplaced_unmapped, self.columns
-                    )
-                )
+            )
         # zero-record file: still need >=1 partition for an empty scan
-        return parts or [BamChunk("", [], 0, 0)]
+        return parts or [BamChunk("", [], ())]
 
     def read(self, part: BamChunk) -> Iterator[tuple]:
         if not part.path:
@@ -135,9 +133,14 @@ class BamReader(DataSourceReader):
         w_seq = cols is None or "seq" in cols
         w_qual = cols is None or "qual" in cols
         w_tags = cols is None or "tags" in cols or "read_group" in (cols or [])
-        rows = decode_chunk(
-            part.path, part.refs, part.v_start, part.v_end,
-            with_seq=w_seq, with_qual=w_qual, with_tags=w_tags,
+        rows = (
+            row
+            for vs, ve in part.spans
+            for row in decode_chunk(
+                part.path, part.refs, vs, ve,
+                with_seq=w_seq, with_qual=w_qual, with_tags=w_tags,
+            )
+            or ()
         )
         proj = (
             [i for i, c in enumerate(READS_COLUMNS) if c in cols] if cols is not None else None
@@ -149,11 +152,11 @@ class BamReader(DataSourceReader):
             return tuple(row[i] for i in proj)
 
         if part.intervals is None and not part.unplaced_unmapped:
-            for row in rows or []:
+            for row in rows:
                 yield emit(row)
             return
         # residual filter (columns: 1=flags, 2=contig, 3=start, 4=end)
-        for row in rows or []:
+        for row in rows:
             contig, start, end = row[2], row[3], row[4]
             if part.intervals is not None and contig is not None and start is not None:
                 if any(

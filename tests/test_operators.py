@@ -5152,6 +5152,36 @@ def test_fan_out_partition_count_is_memoized(spark):
     dispatch._NPART_MEMO.clear()
 
 
+def test_partition_memo_key_names_the_application():
+    """The width memo is keyed on (application id, semantic hash), so the
+    same plan hash under a second application is a separate entry and is
+    probed afresh — never the first application's width."""
+    from types import SimpleNamespace
+
+    from disq_spark.operators import dispatch
+
+    def frame(app_id, width):
+        sc = SimpleNamespace(applicationId=app_id)
+        return SimpleNamespace(
+            sparkSession=SimpleNamespace(sparkContext=sc),
+            semanticHash=lambda: 42,
+            rdd=SimpleNamespace(getNumPartitions=lambda: width),
+        )
+
+    dispatch._NPART_MEMO.clear()
+    try:
+        first, second = frame("app-1", 1), frame("app-2", 8)
+        assert dispatch._npart_key(first) == ("app-1", 42)
+        assert dispatch._npart_key(second) == ("app-2", 42)
+        assert dispatch._source_partitions(first) == 1
+        assert dispatch._source_partitions(second) == 8
+        assert dispatch._NPART_MEMO == {("app-1", 42): 1, ("app-2", 42): 8}
+        # a memo hit: the stored width wins over a fresh probe
+        assert dispatch._source_partitions(frame("app-1", 5)) == 1
+    finally:
+        dispatch._NPART_MEMO.clear()
+
+
 def test_ngram_and_dsir_stages_fan_out_on_narrow_source(spark):
     """r11 stage-sweep fix: the per-byte-heavy gram/feature explodes in
     substring_dup_rate and dsir_weights repartition a narrow source by

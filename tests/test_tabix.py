@@ -264,3 +264,55 @@ def test_tbi_cross_part_check_sees_interior_contigs(tmp_path):
     p1 = sidecar("part-00022", ["chr1"], ["chr1", 40], ["chr1", 90])
     with pytest.raises(ValueError, match="coordinate-sorted"):
         _check_cross_part_order(d, [p0, p1])
+
+
+def test_tbi_pruning_keeps_the_split_owning_a_block_start_line(spark, tmp_path):
+    """A line at offset 0 of the first BGZF block at or after a split's end
+    belongs to that split (text-split ownership), so .tbi pruning must keep
+    it: each record whose tabix chunk starts at block offset 0 is queried
+    alone, at split sizes down to one smaller than a BGZF block."""
+    from disq_spark.formats import bgzf
+    from disq_spark.headers import VcfHeader
+    from disq_spark.schemas import VARIANTS_SCHEMA
+    from disq_spark.sinks.variants import write_vcf
+    from disq_spark.sources.plan import plan_ranges
+    from disq_spark.sources.variants import _range_lines
+
+    header = VcfHeader.from_lines(
+        [
+            "##fileformat=VCFv4.2",
+            "##contig=<ID=20,length=1000000>",
+            '##INFO=<ID=X,Number=1,Type=String,Description="padding">',
+            "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO",
+        ]
+    )
+    # 7 parts of 400 records, 40 kb apart: each part starts a new BGZF
+    # block and a new 16 kb window, so its first record's tabix chunk
+    # begins at offset 0 of a block
+    rows = []
+    for i in range(2800):
+        pos = 40_000 * (i // 400) + 50 * (i % 400) + 1
+        rows.append(("20", pos, pos, None, "A", ["C"], 50.0, [], {"X": f"{i:x}" * (i % 40)}, None))
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 7), VARIANTS_SCHEMA)
+    out = str(tmp_path / "blocks.vcf.bgz")
+    write_vcf(df, header, out, write_tbi=True)
+    idx = read_tbi(out + ".tbi")
+
+    # one record per distinct chunk begin at block offset 0
+    at_block_start = {}  # chunk begin -> (start, end)
+    for r in rows:
+        for cb, _ce in chunks_for_interval(idx, "20", r[1], r[2]):
+            if cb & 0xFFFF == 0:
+                at_block_start.setdefault(cb, (r[1], r[2]))
+    assert len(at_block_start) >= 6
+    block = max(b.c_size for b in bgzf.scan_blocks(out))
+    for split in (block // 3, block, 3 * block, 1 << 20):
+        ranges = plan_ranges([out], split)
+        for start, end in at_block_start.values():
+            kept = [
+                g for g in ranges if split_overlaps_intervals(idx, g.start, g.end, [("20", start, end)])
+            ]
+            lines = [ln for g in kept for ln in _range_lines(out, g.start, g.end)]
+            assert any(ln.startswith(f"20\t{start}\t") for ln in lines), (split, start)
+            got, _ = read_vcf(spark, out, split_size=split, intervals=[Interval("20", start, end)])
+            assert [v.start for v in got.select("start").collect()] == [start], (split, start)
