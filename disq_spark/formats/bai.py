@@ -317,12 +317,14 @@ def record_start_voffs(idx: BaiIndex) -> list[int]:
     """Sorted record-start virtual offsets the index names: every chunk
     begin and every set linear-index entry. Split planning snaps byte
     positions onto these instead of guessing record boundaries."""
-    starts = set()
-    for r in idx.refs:
-        for chunks in r.bins.values():
-            starts.update(cb for cb, _ce in chunks)
-        starts.update(v for v in r.linear if v > 0)
-    return sorted(starts)
+    import numpy as np
+
+    begins = [cb for r in idx.refs for chunks in r.bins.values() for cb, _ce in chunks]
+    linear = [v for r in idx.refs for v in r.linear]
+    # int64 holds any voff of a file under 128 TiB; sort + dedupe in numpy
+    # keeps a whole-genome index (~200k starts) to tens of milliseconds
+    starts = np.unique(np.array(begins + linear, dtype=np.int64))
+    return starts[starts > 0].tolist()
 
 
 def last_indexed_voff(idx: BaiIndex) -> int:

@@ -62,15 +62,11 @@ def resolve_method(method: str, df, small_bytes: int = SMALL_INPUT_BYTES) -> str
 _NPART_MEMO: dict[tuple, int] = {}
 
 
-def _npart_key(df) -> tuple | None:
-    try:
-        return (df.sparkSession.sparkContext.applicationId, df.semanticHash())
-    except Exception:
-        return None
-
-
 def _source_partitions(df) -> int:
-    key = _npart_key(df)
+    try:
+        key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
+    except Exception:
+        key = None
     if key is not None and key in _NPART_MEMO:
         return _NPART_MEMO[key]
     try:

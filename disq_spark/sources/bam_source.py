@@ -8,11 +8,12 @@ planning as distributed jobs — with an index the plan is pure metadata):
 2. split starts, by which index files exist:
    a. ``.sbi``: byte splits -> record-start virtual-offset chunks via the
       index (BamSource.java:99-119);
-   b. else ``.bai``: each byte split snaps to the first record start the
-      index names at or after it — every chunk begin and every set
+   b. else ``.bai``: each byte split starts at the first record start the
+      index names inside it — every chunk begin and every set
       linear-index entry is one;
-   c. else, and for splits past the last indexed record (the
-      unplaced-unmapped tail): byte splits realign to the next BGZF
+   c. else, and for splits holding no indexed record start (a
+      deep-coverage 16 kb window, the unplaced-unmapped tail): byte
+      splits realign to the next BGZF
       block boundary, then a record-start guesser validates candidate
       offsets by checking ~10 consecutive records' field invariants
       (BamSource.java:120-139 + BamRecordGuesser.java:60-226,
@@ -20,8 +21,8 @@ planning as distributed jobs — with an index the plan is pure metadata):
 3. interval queries with a ``.bai``: each split is cut down to its
    intersection with the index's chunks for the intervals (plus the
    unplaced tail when asked), and consecutive spans are packed into
-   partitions of at most ``split_size`` compressed bytes. Full scans keep
-   one partition per split.
+   partitions of about ``split_size`` compressed bytes, never dividing
+   one split's spans. Full scans keep one partition per split.
 
 Executors decode their virtual-offset spans into Arrow batches via
 mapInPandas, inflating only the blocks a span covers. Non-overlap
@@ -272,13 +273,18 @@ def _scan_for_record_start(
 
 
 def plan_bam_chunks(
-    path: str, split_size: int, refs: list[tuple[str, int]], first_voff: int
+    path: str,
+    split_size: int,
+    refs: list[tuple[str, int]],
+    first_voff: int,
+    bai=None,
 ) -> list[tuple[int, int]]:
     """[(vStart, vEnd)] per split, all driver-side. Split starts come from
-    the ``.sbi`` when present; else each byte split snaps to the first
-    record start the ``.bai`` names at or after it; else (no index, or a
-    split past the last indexed record) the block-realign + record-guess
-    fallback."""
+    the ``.sbi`` when present; else a byte split starts at the first
+    record start the ``.bai`` names inside it; else (no index, or no
+    indexed start inside the split, as in a deep-coverage window or the
+    unplaced tail) the block-realign + record-guess fallback. ``bai`` is
+    the already parsed ``.bai``, to spare a second read."""
     size = _dfs.getsize(path)
     sbi_path = path + ".sbi"
     chunks: list[tuple[int, int]] = []
@@ -292,7 +298,7 @@ def plan_bam_chunks(
             start += split_size
         return chunks
 
-    indexed = _bai_record_starts(path, len(refs), size)
+    indexed = _bai_record_starts(path, len(refs), size, bai)
     n_ref = len(refs)
     ref_lens = [l for _n, l in refs]
     starts: list[int] = []
@@ -301,7 +307,7 @@ def plan_bam_chunks(
         i = bisect.bisect_left(indexed, pos << 16)
         if pos == 0:
             starts.append(first_voff)
-        elif i < len(indexed):
+        elif i < len(indexed) and indexed[i] < (pos + split_size) << 16:
             starts.append(indexed[i])
         else:
             buf = _BlockBuffer(path, pos, 1 << 20)
@@ -320,14 +326,16 @@ def plan_bam_chunks(
     return chunks
 
 
-def _bai_record_starts(path: str, n_ref: int, size: int) -> list[int]:
-    """Record-start voffs named by ``path + '.bai'`` (sorted), or [] when
-    there is no index or it does not describe this file's references."""
+def _bai_record_starts(path: str, n_ref: int, size: int, idx=None) -> list[int]:
+    """Record-start voffs named by ``idx`` or else ``path + '.bai'``
+    (sorted), or [] when there is no index or it does not describe this
+    file's references."""
     from disq_spark.formats import bai as baimod
 
-    if not _dfs.exists(path + ".bai"):
-        return []
-    idx = baimod.read_bai(path + ".bai")
+    if idx is None:
+        if not _dfs.exists(path + ".bai"):
+            return []
+        idx = baimod.read_bai(path + ".bai")
     if len(idx.refs) != n_ref:
         return []
     starts = baimod.record_start_voffs(idx)
@@ -763,6 +771,7 @@ def _chunk_may_match(
     chunks: list[tuple[int, int]],
     intervals: list | None,
     unplaced_unmapped: bool,
+    idx=None,
 ) -> list[tuple[int, int]]:
     """The parts of the planned (vStart, vEnd) chunks the .bai says can
     hold matching records: each chunk intersected with the union of every
@@ -773,11 +782,13 @@ def _chunk_may_match(
     chunk, so decoding the spans still reads each record at most once.
     Every span boundary is a chunk boundary or an index chunk begin, both
     record starts. Pure metadata — the residual record filter keeps
-    correctness however loose the index is.
+    correctness however loose the index is. ``idx`` is the already parsed
+    index at ``bai_path``, if the caller has it.
     """
     from disq_spark.formats import bai as baimod
 
-    idx = baimod.read_bai(bai_path)
+    if idx is None:
+        idx = baimod.read_bai(bai_path)
     ref_id = {name: i for i, (name, _l) in enumerate(refs)}
     wanted: list[tuple[int, int]] = []
     for iv in intervals or []:
@@ -800,9 +811,11 @@ def _chunk_may_match(
 def _group_spans(
     spans: list[tuple[int, int]], chunks: list[tuple[int, int]], split_size: int
 ) -> list[list[tuple[int, int]]]:
-    """Consecutive spans packed into partitions of at most ``split_size``
-    compressed bytes. Spans of one planned chunk always share a partition,
-    so there are never more partitions than chunks with a span."""
+    """Consecutive spans packed into partitions: a span joins the open
+    partition when it lies in the same planned chunk as that partition's
+    last span, or when the partition stays within ``split_size``
+    compressed bytes. So the spans of one chunk always share a partition,
+    and there are never more partitions than chunks with a span."""
     chunk_starts = [vs for vs, _ve in chunks]
     groups: list[list[tuple[int, int]]] = []
     group_chunk = size = 0
@@ -814,7 +827,8 @@ def _group_spans(
             size += n
         else:
             groups.append([(vs, ve)])
-            group_chunk, size = k, n
+            size = n
+        group_chunk = k
     return groups
 
 
@@ -833,13 +847,21 @@ def plan_bam_partitions(
     (``_chunk_may_match``), packed by ``_group_spans``; without a
     ``.bai`` every split is read and the residual filter does the work.
     """
+    from disq_spark.formats import bai as baimod
+
     parts: list[tuple[str, list[tuple[int, int]]]] = []
     for p, refs, first_voff in files:
-        chunks = plan_bam_chunks(p, split_size, refs, first_voff)
+        has_bai = _dfs.exists(p + ".bai")
+        query = has_bai and (intervals is not None or unplaced_unmapped)
+        # parsed once: both split planning and span selection read it
+        idx = None
+        if query or (has_bai and not _dfs.exists(p + ".sbi")):
+            idx = baimod.read_bai(p + ".bai")
+        chunks = plan_bam_chunks(p, split_size, refs, first_voff, bai=idx)
         if pair_atomic:
             chunks = adjust_chunks_for_queryname_groups(p, chunks)
-        if (intervals is not None or unplaced_unmapped) and _dfs.exists(p + ".bai"):
-            spans = _chunk_may_match(p + ".bai", refs, chunks, intervals, unplaced_unmapped)
+        if query:
+            spans = _chunk_may_match(p + ".bai", refs, chunks, intervals, unplaced_unmapped, idx)
             parts.extend((p, g) for g in _group_spans(spans, chunks, split_size))
         else:
             parts.extend((p, [c]) for c in chunks)

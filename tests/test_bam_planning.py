@@ -5,6 +5,7 @@ crossing 16 kb windows (coarser bins), spliced reads spanning hundreds of
 kb, placed-unmapped mates and an unplaced-unmapped tail — and written with
 ``write_bam(write_bai=True)`` and no ``.sbi``."""
 
+import bisect
 import os
 import random
 import shutil
@@ -42,9 +43,7 @@ QUERIES = [
 ]
 
 
-def _reads(seed: int = 11) -> list[tuple]:
-    rng = random.Random(seed)
-
+def _read_maker(rng):
     def read(flags, contig, start, cigar, ref_len):
         seq = "".join(rng.choice("ACGT") for _ in range(60))
         qual = "".join(chr(33 + rng.randrange(2, 41)) for _ in range(60))
@@ -52,6 +51,12 @@ def _reads(seed: int = 11) -> list[tuple]:
         return (flags, contig, start, end, 60 if cigar else 0, cigar,
                 None, None, 0, seq, qual, {"NM": "i:0"}, None)
 
+    return read
+
+
+def _reads(seed: int = 11) -> list[tuple]:
+    rng = random.Random(seed)
+    read = _read_maker(rng)
     rows = []
     for contig, length in CONTIGS[:2]:
         for s in sorted(rng.randrange(1, length - 300_000) for _ in range(1500)):
@@ -70,16 +75,29 @@ def _reads(seed: int = 11) -> list[tuple]:
     return [(f"r{i:05d}",) + r for i, r in enumerate(rows)]
 
 
-@pytest.fixture(scope="module")
-def indexed_bam(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("bai_planning")
-    path = str(d / "sorted.bam")
+def _pileup_reads(seed: int = 12) -> list[tuple]:
+    """Deep coverage: every read starts in the first two 16 kb windows, so
+    the .bai names only a few record starts for the whole pile."""
+    rng = random.Random(seed)
+    read = _read_maker(rng)
+    rows = [read(0, "c1", s, "60M", 60) for s in sorted(rng.randrange(1, 30_000) for _ in range(3000))]
+    return [(f"p{i:05d}",) + r for i, r in enumerate(rows)]
+
+
+def _write_indexed(spark, path, rows):
     text = "@HD\tVN:1.6\tSO:coordinate\n" + "".join(
         f"@SQ\tSN:{n}\tLN:{ln}\n" for n, ln in CONTIGS
     )
-    df = spark.createDataFrame(_reads(), READS_SCHEMA)
+    df = spark.createDataFrame(rows, READS_SCHEMA)
     write_bam(df, SamHeader(text=text), path, write_sbi=False, write_bai=True)
     assert os.path.exists(path + ".bai") and not os.path.exists(path + ".sbi")
+    return path
+
+
+@pytest.fixture(scope="module")
+def indexed_bam(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("bai_planning")
+    path = _write_indexed(spark, str(d / "sorted.bam"), _reads())
     assert os.path.getsize(path) > 3 * SPLIT_SIZES[1]
     return path
 
@@ -105,13 +123,16 @@ def test_bai_planned_splits_decode_every_record_once(indexed_bam, monkeypatch):
         )
         chunks = plan_bam_chunks(indexed_bam, split, refs, first)
         monkeypatch.undo()
-        # the guesser runs only for splits past the last indexed record
-        # start, i.e. inside the unplaced-unmapped tail
-        assert len(guesses) == sum(p << 16 > indexed[-1] for p in range(split, size, split))
+        # the guesser runs only for splits the index names no record
+        # start inside, such as those in the unplaced-unmapped tail
+        unindexed = [
+            p for p in range(split, size, split)
+            if bisect.bisect_left(indexed, p << 16) == bisect.bisect_left(indexed, (p + split) << 16)
+        ]
+        assert len(guesses) == len(unindexed)
         assert chunks[0][0] == first and chunks[-1][1] == size << 16
         assert all(a[1] == b[0] for a, b in zip(chunks, chunks[1:]))
-        for vs, _ve in chunks[1:]:
-            assert vs in indexed or vs > indexed[-1]
+        assert sum(vs not in indexed for vs, _ve in chunks[1:]) <= len(guesses)
         assert _names(indexed_bam, chunks, refs) == want
 
 
@@ -123,6 +144,25 @@ def test_bai_planning_matches_guesser_planning(indexed_bam, tmp_path, split):
     by_index = plan_bam_chunks(indexed_bam, split, refs, first)
     by_guess = plan_bam_chunks(bare, split, refs, first)
     assert _names(indexed_bam, by_index, refs) == _names(bare, by_guess, refs)
+
+
+def test_deep_coverage_keeps_as_many_splits_as_the_guesser(spark, tmp_path):
+    """A split whose byte range holds no indexed record start (one 16 kb
+    window of a deep pile is one leaf-bin chunk) falls back to the
+    guesser instead of borrowing a later indexed start, so the pile is
+    not folded into a few oversized splits."""
+    rows = _pileup_reads()
+    path = _write_indexed(spark, str(tmp_path / "pileup.bam"), rows)
+    bare = str(tmp_path / "bare.bam")
+    shutil.copyfile(path, bare)
+    _h, refs, first = read_bam_header(path)
+    indexed = baimod.record_start_voffs(baimod.read_bai(path + ".bai"))
+    for split in (2048, 8192, 32768):
+        by_index = plan_bam_chunks(path, split, refs, first)
+        by_guess = plan_bam_chunks(bare, split, refs, first)
+        assert len(by_guess) > len(indexed)  # the index alone is too coarse
+        assert len(by_index) >= len(by_guess)
+        assert _names(path, by_index, refs) == [r[0] for r in rows]
 
 
 @pytest.mark.parametrize("split", SPLIT_SIZES)
@@ -141,10 +181,23 @@ def test_span_plan_is_disjoint_inside_splits_and_packed(indexed_bam, split, ivs,
     parts = plan_bam_partitions([(indexed_bam, refs, first)], split, ivs, unplaced)
     assert [s for _p, g in parts for s in g] == spans
     assert len(parts) <= len(set(owners))
+    # the spans of one split never land in two partitions
+    part_of = [i for i, (_p, g) in enumerate(parts) for _s in g]
+    for owner in set(owners):
+        assert len({part_of[j] for j, o in enumerate(owners) if o == owner}) == 1
     # a full scan keeps one partition per planned split
     assert [g for _p, g in plan_bam_partitions([(indexed_bam, refs, first)], split)] == [
         [c] for c in chunks
     ]
+
+
+def test_group_spans_keeps_a_split_whole_after_packing_into_an_earlier_one():
+    """A split whose first span was packed into the previous split's
+    partition keeps its later spans there, even past ``split_size``."""
+    chunks = [(0, 100 << 16), (100 << 16, 200 << 16)]
+    spans = [(0, 10 << 16), (100 << 16, 110 << 16), (150 << 16, 190 << 16)]
+    assert bam_source._group_spans(spans, chunks, 30) == [spans]
+    assert bam_source._group_spans(spans, chunks, 5) == [spans[:1], spans[1:]]
 
 
 @pytest.mark.parametrize("ivs,unplaced", QUERIES)

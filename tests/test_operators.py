@@ -5171,8 +5171,6 @@ def test_partition_memo_key_names_the_application():
     dispatch._NPART_MEMO.clear()
     try:
         first, second = frame("app-1", 1), frame("app-2", 8)
-        assert dispatch._npart_key(first) == ("app-1", 42)
-        assert dispatch._npart_key(second) == ("app-2", 42)
         assert dispatch._source_partitions(first) == 1
         assert dispatch._source_partitions(second) == 8
         assert dispatch._NPART_MEMO == {("app-1", 42): 1, ("app-2", 42): 8}
