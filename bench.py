@@ -124,6 +124,8 @@ def main() -> None:
         for name in HEADLINE
     }
     result = dict(samples[0])
+    # child 1's per-pass canaries live in pass_canaries_runs with the rest
+    result.pop("pass_canaries", None)
     result["queries"] = med_q
     result["value"] = round(sum(med_q.values()), 3)
     result["cold_run_totals"] = [s["value"] for s in samples]

@@ -23,7 +23,6 @@ from __future__ import annotations
 from disq_spark import fs as _dfs
 
 import os
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -32,7 +31,7 @@ from disq_spark.formats.cram import plan_cram_containers, read_crai
 from disq_spark.formats.cram_decode import decode_cram_range, read_cram_header
 from disq_spark.headers import SamHeader
 from disq_spark.schemas import READS_COLUMNS, READS_SCHEMA
-from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, resolve_paths
+from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, map_plan, resolve_paths
 
 CRAM_EXTENSIONS = (".cram",)
 
@@ -114,28 +113,15 @@ def read_cram(
             )
         )
 
-    if not plan:
-        return spark.createDataFrame([], READS_SCHEMA), header
-
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(plan, len(plan)),
-        "path string, start long, end long",
-    )
     refs_b = refs
     ref_path = reference_path
     as_n = missing_ref_as_n
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                rows = decode_cram_range(
-                    r["path"], int(r["start"]), int(r["end"]), refs_b, ref_path,
-                    missing_ref_as_n=as_n,
-                )
-                if rows:
-                    yield pd.DataFrame(rows, columns=READS_COLUMNS)
+    def decode(r: tuple[str, int, int]) -> pd.DataFrame | None:
+        rows = decode_cram_range(*r, refs_b, ref_path, missing_ref_as_n=as_n)
+        return pd.DataFrame(rows, columns=READS_COLUMNS) if rows else None
 
-    df = plan_df.mapInPandas(decode, READS_SCHEMA)
+    df = map_plan(spark, plan, decode, READS_SCHEMA)
     if intervals is not None or traverse_unplaced_unmapped:
         from disq_spark.functions.intervals import filter_intervals
 

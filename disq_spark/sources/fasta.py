@@ -12,13 +12,12 @@ body starts the k-mer).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from disq_spark.formats.gzi import open_indexed_reference, read_fai
+from disq_spark.sources.plan import map_plan
 
 FASTA_WINDOW_SCHEMA = T.StructType(
     [
@@ -48,19 +47,10 @@ def read_fasta_windows(
             plan.append((name, s, min(s + window - 1, e.length)))
             s += window
 
-    sc = spark.sparkContext
-    plan_df = spark.createDataFrame(
-        sc.parallelize(plan, max(len(plan), 1)), "contig string, start long, end long"
-    )
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fetch(w: tuple[str, int, int]) -> pd.DataFrame:
+        c, s, e = w
         ref = open_indexed_reference(path)
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                c, s, e = r["contig"], int(r["start"]), int(r["end"])
-                seq = ref.get(c, s, min(e + overlap, ref.fai[c].length))
-                rows.append((c, s, e, seq))
-            yield pd.DataFrame(rows, columns=["contig", "start", "end", "seq"])
+        seq = ref.get(c, s, min(e + overlap, ref.fai[c].length))
+        return pd.DataFrame([(c, s, e, seq)], columns=["contig", "start", "end", "seq"])
 
-    return plan_df.mapInPandas(fetch, FASTA_WINDOW_SCHEMA)
+    return map_plan(spark, plan, fetch, FASTA_WINDOW_SCHEMA)

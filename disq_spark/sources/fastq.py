@@ -29,7 +29,7 @@ from pyspark.sql import types as T
 from disq_spark import fs as _dfs
 from disq_spark.formats import fastq as fq
 from disq_spark.sinks import merge
-from disq_spark.sources.plan import resolve_paths
+from disq_spark.sources.plan import map_plan, resolve_paths
 
 FASTQ_EXTENSIONS = (".fastq", ".fq", ".fastq.gz", ".fq.gz")
 
@@ -86,75 +86,48 @@ def read_fastq(
         for i in range(nsplits):
             bounds.append((p, i * split, min((i + 1) * split, size), size))
 
-    sc = spark.sparkContext
-    plan_df = spark.createDataFrame(
-        sc.parallelize(bounds, max(len(bounds), 1)),
-        "path string, start long, end long, size long",
-    )
+    def snap_bounds(b: tuple[str, int, int, int]) -> pd.DataFrame:
+        p, s, e, size = b
+        snapped = (p, 0, size) if p.endswith(".gz") else (p, _snap(p, s, size), _snap(p, e, size))
+        return pd.DataFrame([snapped], columns=["path", "start", "end"])
 
-    def snap_bounds(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                p, s, e, size = r["path"], int(r["start"]), int(r["end"]), int(r["size"])
-                if p.endswith(".gz"):
-                    rows.append((p, 0, size))
-                else:
-                    rows.append((p, _snap(p, s, size), _snap(p, e, size)))
-            yield pd.DataFrame(rows, columns=["path", "start", "end"])
+    snapped = map_plan(spark, bounds, snap_bounds, "path string, start long, end long").collect()
+    ranges = [(r.path, r.start, r.end) for r in snapped if r.end > r.start]
 
-    snapped = plan_df.mapInPandas(
-        snap_bounds, "path string, start long, end long"
-    ).toPandas()
-    ranges = [
-        (r["path"], int(r["start"]), int(r["end"]))
-        for _, r in snapped.iterrows()
-        if r["end"] > r["start"]
-    ]
-
-    if not ranges:
-        return spark.createDataFrame([], FASTQ_SCHEMA)
-    exec_df = spark.createDataFrame(
-        sc.parallelize(ranges, len(ranges)), "path string, start long, end long"
-    )
-
-    def parse_ranges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse_range(r: tuple[str, int, int]) -> pd.DataFrame | None:
         import gzip
 
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                p, s, e = r["path"], int(r["start"]), int(r["end"])
-                if p.endswith(".gz"):
-                    with gzip.open(_dfs.open_input(p), "rt", encoding="ascii") as f:
-                        lines = f.read().splitlines()
-                else:
-                    with _dfs.open_input(p) as f:
-                        f.seek(s)
-                        data = f.read(e - s)
-                        # the last record owned here may continue past e
-                        while data and not data.endswith(b"\n"):
-                            more = f.read(1 << 16)
-                            if not more:
-                                break
-                            data += more
-                        # records are owned by their start offset: we may
-                        # have pulled whole extra records after e; drop
-                        # any record whose start byte is >= e - s
-                        lines_b = data.split(b"\n")
-                        if lines_b and lines_b[-1] == b"":
-                            lines_b.pop()
-                        keep: list[bytes] = []
-                        off = 0
-                        for i in range(0, len(lines_b) - len(lines_b) % 4, 4):
-                            if off >= e - s:
-                                break
-                            keep.extend(lines_b[i : i + 4])
-                            off += sum(len(x) + 1 for x in lines_b[i : i + 4])
-                        lines = [x.decode("ascii") for x in keep]
-                if lines:
-                    yield pd.DataFrame(fq.parse_lines(lines))
+        p, s, e = r
+        if p.endswith(".gz"):
+            with gzip.open(_dfs.open_input(p), "rt", encoding="ascii") as f:
+                lines = f.read().splitlines()
+        else:
+            with _dfs.open_input(p) as f:
+                f.seek(s)
+                data = f.read(e - s)
+                # the last record owned here may continue past e
+                while data and not data.endswith(b"\n"):
+                    more = f.read(1 << 16)
+                    if not more:
+                        break
+                    data += more
+                # records are owned by their start offset: we may
+                # have pulled whole extra records after e; drop
+                # any record whose start byte is >= e - s
+                lines_b = data.split(b"\n")
+                if lines_b and lines_b[-1] == b"":
+                    lines_b.pop()
+                keep: list[bytes] = []
+                off = 0
+                for i in range(0, len(lines_b) - len(lines_b) % 4, 4):
+                    if off >= e - s:
+                        break
+                    keep.extend(lines_b[i : i + 4])
+                    off += sum(len(x) + 1 for x in lines_b[i : i + 4])
+                lines = [x.decode("ascii") for x in keep]
+        return pd.DataFrame(fq.parse_lines(lines)) if lines else None
 
-    return exec_df.mapInPandas(parse_ranges, FASTQ_SCHEMA)
+    return map_plan(spark, ranges, parse_range, FASTQ_SCHEMA)
 
 
 def write_fastq(df: DataFrame, path: str, single_file: bool | None = None) -> None:

@@ -2,8 +2,9 @@
 
 The reference plans splits with Spark jobs over ``PathSplit``/``BgzfBlock``
 RDDs (PathSplitSource.java:68-113, BgzfBlockSource.java:59-74). We plan
-driver-side (pure metadata: file lengths + optional indexes) and ship the
-plan as a tiny DataFrame of byte ranges — one Spark job total, and the
+driver-side (pure metadata: file lengths + optional indexes) and run the
+plan with ``map_plan``: one task per plan row over a JVM-side range, the
+rows riding in the task's function — one Spark job total, and the
 planner itself costs milliseconds even for thousands of files.
 
 At 100 TB the plan is ~#files x (size/split) rows of (path, start, end)
@@ -18,6 +19,11 @@ from disq_spark import fs as _dfs
 import glob
 import os
 from dataclasses import dataclass
+from typing import Callable, Iterator, Sequence
+
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_SPLIT_SIZE = 128 * 1024 * 1024  # PathSplitSource.java:47 default
 
@@ -78,3 +84,46 @@ def plan_ranges(paths: list[str], split_size: int = DEFAULT_SPLIT_SIZE) -> list[
             out.append(PathRange(p, start, min(start + split_size, size)))
             start += split_size
     return out
+
+
+_ID_SCHEMA_JSON = T.StructType([T.StructField("id", T.LongType(), False)]).json()
+
+
+def map_plan(
+    spark: SparkSession,
+    rows: Sequence,
+    fn: Callable[[object], pd.DataFrame | None],
+    schema,
+) -> DataFrame:
+    """Run ``fn(rows[i])`` as task i of a ``mapInPandas`` and return the
+    union of the frames it returns (``None`` adds none), typed ``schema``.
+
+    The leaf is a JVM ``LogicalRDD`` over ``range(0, n, 1, n)``: partition
+    i holds exactly id i, so partition order == plan order == file order
+    (what single-file sinks and ``collect()`` rely on), and no Python
+    worker produces it — a ``parallelize``d plan frame costs each task a
+    second Python worker just to hand its row to the JVM. ``rows`` travel
+    in the function's closure (PySpark broadcasts a pickled command over
+    1 MB). A ``LogicalRDD`` keeps the size estimate at
+    ``spark.sql.defaultSizeInBytes``, where a bare ``spark.range`` leaf
+    estimates a few bytes and would let the planner broadcast the read
+    side of a join; and each call gets a fresh RDD, so the
+    ``semanticHash`` of reads of different files never aliases.
+    """
+    n = len(rows)
+    if n == 0:
+        return spark.createDataFrame([], schema)
+    js = spark._jsparkSession
+    leaf = DataFrame(
+        js.createDataFrame(js.range(0, n, 1, n).toDF().rdd(), js.parseDataType(_ID_SCHEMA_JSON)),
+        spark,
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for i in pdf["id"]:
+                out = fn(rows[int(i)])
+                if out is not None:
+                    yield out
+
+    return leaf.mapInPandas(run, schema)

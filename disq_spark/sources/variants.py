@@ -8,11 +8,12 @@ lines after dropping '#' (VcfSource.java:133-149).
 Spark-first shape:
 - plain .vcf  -> ``spark.read.text`` (natively splittable) + mapInPandas
   batch parse.
-- .bgz / BGZF-content .gz -> driver plans block-aligned byte ranges, a
-  tiny plan-DataFrame is exploded via mapInPandas into decompressed
-  lines; split ownership follows text-split semantics (a partition owns
-  lines that *start* after its first newline, reading past its end to
-  finish the last line) so every record is decoded exactly once.
+- .bgz / BGZF-content .gz -> driver plans block-aligned byte ranges,
+  each decoded into lines by its own ``plan.map_plan`` task (a JVM-side
+  range leaf, the ranges riding in the task's function); split
+  ownership follows text-split semantics (a partition owns lines that
+  *start* after its first newline, reading past its end to finish the
+  last line) so every record is decoded exactly once.
 - plain-gzip .gz -> unsplittable, one range covering the file
   (BGZFEnhancedGzipCodec.java:66-101 sniffing decides which).
 """
@@ -32,7 +33,7 @@ from disq_spark.formats import bgzf
 from disq_spark.formats.vcf import parse_vcf_lines
 from disq_spark.headers import VcfHeader
 from disq_spark.schemas import VARIANTS_SCHEMA
-from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, plan_ranges, resolve_paths
+from disq_spark.sources.plan import DEFAULT_SPLIT_SIZE, map_plan, plan_ranges, resolve_paths
 
 VCF_EXTENSIONS = (".vcf", ".vcf.gz", ".vcf.bgz", ".vcf.bgzf.gz")
 
@@ -148,22 +149,15 @@ def _read_vcf_all(
         else:
             ranges.append((p, 0, _dfs.getsize(p)))
 
-    # parallelize slices: partition i == plan row i, preserving file order
-    # through the scan (single-file sinks depend on it; repartition would
-    # round-robin arbitrarily)
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(ranges, max(len(ranges), 1)),
-        "path string, start long, end long",
-    )
+    # partition i == plan row i, preserving file order through the scan
+    # (single-file sinks depend on it)
+    def decode_range(r: tuple[str, int, int]) -> pd.DataFrame | None:
+        lines = _range_lines(*r)
+        if not lines:
+            return None
+        return parse_vcf_lines(pd.Series(lines, dtype="object"), samples, mode, with_genotypes)
 
-    def decode_ranges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                lines = _range_lines(row["path"], int(row["start"]), int(row["end"]))
-                if lines:
-                    yield parse_vcf_lines(pd.Series(lines, dtype="object"), samples, mode, with_genotypes)
-
-    return plan_df.mapInPandas(decode_ranges, VARIANTS_SCHEMA), header
+    return map_plan(spark, ranges, decode_range, VARIANTS_SCHEMA), header
 
 
 def _range_lines(path: str, start: int, end: int) -> list[str]:
@@ -288,40 +282,24 @@ def build_tbi(
     from disq_spark.formats import tabix as tbimod
 
     ranges = [(r.path, r.start, r.end) for r in plan_ranges([path], split_size)]
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(ranges, max(len(ranges), 1)),
-        "path string, start long, end long",
-    )
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                b = tbimod.TbiBuilder()
-                for line, vs, ve in _range_records_voff(
-                    row["path"], int(row["start"]), int(row["end"])
-                ):
-                    if line.startswith("#") or not line:
-                        continue
-                    fl = line.split("\t", 8)
-                    contig, pos, ref = fl[0], int(fl[1]), fl[3]
-                    end_pos = pos + len(ref) - 1
-                    if len(fl) > 7 and "END=" in fl[7]:
-                        for kv in fl[7].split(";"):
-                            if kv.startswith("END="):
-                                end_pos = int(kv[4:])
-                                break
-                    b.add(contig, pos, end_pos, vs, ve)
-                yield pd.DataFrame(
-                    {
-                        "start": [int(row["start"])],
-                        "frag": [
-                            pickle.dumps((b.names, b.bins, b.linear, b.stats))
-                        ],
-                    }
-                )
+    def scan(r: tuple[str, int, int]) -> pd.DataFrame:
+        b = tbimod.TbiBuilder()
+        for line, vs, ve in _range_records_voff(*r):
+            if line.startswith("#") or not line:
+                continue
+            fl = line.split("\t", 8)
+            contig, pos, ref = fl[0], int(fl[1]), fl[3]
+            end_pos = pos + len(ref) - 1
+            if len(fl) > 7 and "END=" in fl[7]:
+                for kv in fl[7].split(";"):
+                    if kv.startswith("END="):
+                        end_pos = int(kv[4:])
+                        break
+            b.add(contig, pos, end_pos, vs, ve)
+        return pd.DataFrame({"frag": [pickle.dumps((b.names, b.bins, b.linear, b.stats))]})
 
-    rows = plan_df.mapInPandas(scan, "start long, frag binary").collect()
-    rows.sort(key=lambda r: r.start)
+    rows = map_plan(spark, ranges, scan, "frag binary").collect()  # in plan (file) order
     parts = []
     for r in rows:
         names, bins, linear, stats = pickle.loads(r.frag)
@@ -367,29 +345,23 @@ def _read_plain_pruned(
             e = min(s + split_size, size)
             if split_overlaps_intervals(tidx, s, e, triples):
                 ranges.append((p, s, e))
-    if not ranges:
-        return spark.createDataFrame([], VARIANTS_SCHEMA)
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(ranges, len(ranges)),
-        "path string, start long, end long",
-    )
 
-    def parse_range(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                lines: list[str] = []
-                with _dfs.open_input(r["path"]) as f:
-                    if int(r["start"]) > 0:
-                        f.seek(int(r["start"]) - 1)
-                        f.readline()  # straddling line belongs to prior split
-                    while f.tell() < int(r["end"]):
-                        raw = f.readline()
-                        if not raw:
-                            break
-                        text = raw.decode("utf-8").rstrip("\n")
-                        if text and not text.startswith("#"):
-                            lines.append(text)
-                if lines:
-                    yield parse_vcf_lines(pd.Series(lines, dtype="object"), samples, mode, with_genotypes)
+    def parse_range(r: tuple[str, int, int]) -> pd.DataFrame | None:
+        p, start, end = r
+        lines: list[str] = []
+        with _dfs.open_input(p) as f:
+            if start > 0:
+                f.seek(start - 1)
+                f.readline()  # straddling line belongs to prior split
+            while f.tell() < end:
+                raw = f.readline()
+                if not raw:
+                    break
+                text = raw.decode("utf-8").rstrip("\n")
+                if text and not text.startswith("#"):
+                    lines.append(text)
+        if not lines:
+            return None
+        return parse_vcf_lines(pd.Series(lines, dtype="object"), samples, mode, with_genotypes)
 
-    return plan_df.mapInPandas(parse_range, VARIANTS_SCHEMA)
+    return map_plan(spark, ranges, parse_range, VARIANTS_SCHEMA)

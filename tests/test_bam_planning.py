@@ -238,3 +238,30 @@ def test_interval_read_decodes_only_the_spans(spark, indexed_bam):
     returned = [r.name for r in filter_intervals(full, ivs).select("name").collect()]
     assert returned and set(returned) <= set(decoded)
     assert len(decoded) < len(_reads()) / 10
+
+
+@pytest.fixture
+def bare_copy(indexed_bam, tmp_path):
+    bare = str(tmp_path / "bare.bam")
+    shutil.copyfile(indexed_bam, bare)
+    return bare
+
+
+def test_build_bai_equals_the_written_bai(spark, indexed_bam, bare_copy):
+    bam_source.build_bai(spark, bare_copy, split_size=SPLIT_SIZES[1])
+    with open(indexed_bam + ".bai", "rb") as a, open(bare_copy + ".bai", "rb") as b:
+        assert b.read() == a.read()
+
+
+def test_sbi_planned_reads_decode_every_record_once(spark, bare_copy):
+    bam_source.build_sbi(spark, bare_copy, split_size=SPLIT_SIZES[1])
+    assert os.path.exists(bare_copy + ".sbi") and not os.path.exists(bare_copy + ".bai")
+    want = [r[0] for r in _reads()]
+    for split in SPLIT_SIZES[:3]:
+        df, _ = read_bam(spark, bare_copy, split_size=split)
+        assert df.rdd.getNumPartitions() > 1
+        assert [r.name for r in df.select("name").collect()] == want
+
+
+def test_record_guesser_is_exact_on_the_generated_bam(spark, bare_copy):
+    assert bam_source.check_record_guesser(spark, bare_copy, split_size=SPLIT_SIZES[0]).collect() == []

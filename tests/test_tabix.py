@@ -316,3 +316,23 @@ def test_tbi_pruning_keeps_the_split_owning_a_block_start_line(spark, tmp_path):
             assert any(ln.startswith(f"20\t{start}\t") for ln in lines), (split, start)
             got, _ = read_vcf(spark, out, split_size=split, intervals=[Interval("20", start, end)])
             assert [v.start for v in got.select("start").collect()] == [start], (split, start)
+
+
+def test_generated_bgzf_vcf_reads_every_record_once(spark, generated_vcf):
+    path, want = generated_vcf
+    for split in (8_000, 40_000, 1 << 20):
+        df, _ = read_vcf(spark, path, split_size=split)
+        assert [(r.contig, r.start) for r in df.select("contig", "start").collect()] == want
+
+
+def test_build_tbi_equals_the_written_tbi(spark, generated_vcf, tmp_path):
+    import shutil
+
+    from disq_spark.sources.variants import build_tbi
+
+    path, _ = generated_vcf
+    bare = str(tmp_path / "bare.vcf.bgz")
+    shutil.copyfile(path, bare)  # no .tbi
+    build_tbi(spark, bare, split_size=8_000)
+    with open(path + ".tbi", "rb") as a, open(bare + ".tbi", "rb") as b:
+        assert b.read() == a.read()

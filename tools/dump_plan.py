@@ -1,9 +1,8 @@
 """Dump the formatted physical plan of registered gates to files.
 
-Worktree-safe twin of tools/explain.py: resolves the repo root from this
-file's location (explain.py hard-codes /root/repo, which silently imports
-HEAD code when run from a historical worktree — exactly the mistake a
-before/after plan comparison cannot afford).
+Resolves the repo root from this file's location, so a copy checked out
+at an older commit imports that commit's code, not another checkout's —
+what a before/after plan comparison needs.
 
 Usage:
     python tools/dump_plan.py --sf DIR --out-dir plans/r11 --suffix _after \
